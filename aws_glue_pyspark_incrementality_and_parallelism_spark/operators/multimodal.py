@@ -205,18 +205,12 @@ def fan_out(df: DataFrame) -> DataFrame:
     codec cost, and at 100 TB the same decoupling holds — decode
     parallelism should track CPUs, not input byte splits.
 
-    r10: routed through ``session.fan_out_compute`` with
-    ``elective=False`` — the spread here is LOAD-BEARING, not elective:
-    per-partition decode cost is tens of seconds, so skipping it under
-    a busy scheduler (tried first, measured in the r10 official bench)
-    turned each codec lane into a single-task straggler that held a
-    FAIR-pool slot for its whole serial runtime and took the concurrent
-    wave 60 s -> 272 s while the box idled at load ~13/32 (guide §2.6).
-    The busy-scheduler skip and the SPARK_GRAFT_FANOUT knob therefore
-    do NOT apply; the wide-input exit still does (a >=parallelism-file
-    production scan keeps its partitioning instead of collapsing to a
-    32-way exchange, which the pre-r10 unconditional repartition would
-    have forced)."""
+    Routed through ``session.fan_out_compute`` with ``elective=False``:
+    the spread here is load-bearing, so the busy-scheduler skip does not
+    apply (skipping it turned each codec lane into a single-task
+    straggler that held a FAIR-pool slot for its whole serial runtime).
+    The wide-input exit still does: a production scan with at least
+    ``defaultParallelism`` files keeps its partitioning."""
     from ..session import fan_out_compute
 
     return fan_out_compute(df, elective=False)

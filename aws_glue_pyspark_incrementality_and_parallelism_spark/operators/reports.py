@@ -68,6 +68,22 @@ def joined_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def by_customer(joined: DataFrame) -> DataFrame:
+    """Per (customer, order day) revenue over any frame carrying
+    ``c_custkey``, ``c_name``, ``o_orderdate`` and ``l_extendedprice``."""
+    return joined.groupBy(
+        "c_custkey", "c_name", F.to_date("o_orderdate").alias("order_date")
+    ).agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
+
+
+def by_supplier(joined: DataFrame) -> DataFrame:
+    """Per (supplier, ship day) revenue over any frame carrying
+    ``s_suppkey``, ``s_name``, ``l_shipdate`` and ``l_extendedprice``."""
+    return joined.groupBy(
+        "s_suppkey", "s_name", F.to_date("l_shipdate").alias("ship_date")
+    ).agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
+
+
 def sales_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Report A — per (customer, day) revenue.
 
@@ -75,11 +91,7 @@ def sales_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (glue_rds_to_redshift.py:62, bug-corrected per SURVEY §8 B6):
     groupBy(account, holder name, date) → sum(amount).
     """
-    return (
-        joined_sales(spark, sf_dir)
-        .groupBy("c_custkey", "c_name", F.to_date("o_orderdate").alias("order_date"))
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
-    )
+    return by_customer(joined_sales(spark, sf_dir))
 
 
 def sales_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,10 +105,8 @@ def sales_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey", "l_extendedprice", "l_shipdate"
     )
     supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
+    return by_supplier(
         lineitem.join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey, "inner")
-        .groupBy("s_suppkey", "s_name", F.to_date("l_shipdate").alias("ship_date"))
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
     )
 
 

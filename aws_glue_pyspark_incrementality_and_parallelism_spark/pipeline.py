@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import parallel, session
+from .operators import reports
 from .sources.incremental import BookmarkStore, incremental_read
 from .sources.io import load_table, write_parquet
 
@@ -111,19 +112,15 @@ def run_etl(
     }
 
     def _customer_report() -> int:
-        df = (
-            joined.groupBy("c_custkey", "c_name", F.to_date("o_orderdate").alias("order_date"))
-            .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
+        write_parquet(
+            reports.by_customer(joined), paths["sales_by_customer"], single_file=single_file_outputs
         )
-        write_parquet(df, paths["sales_by_customer"], single_file=single_file_outputs)
         return spark.read.parquet(paths["sales_by_customer"]).count()
 
     def _supplier_report() -> int:
-        df = (
-            joined.groupBy("s_suppkey", "s_name", F.to_date("l_shipdate").alias("ship_date"))
-            .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
+        write_parquet(
+            reports.by_supplier(joined), paths["sales_by_supplier"], single_file=single_file_outputs
         )
-        write_parquet(df, paths["sales_by_supplier"], single_file=single_file_outputs)
         return spark.read.parquet(paths["sales_by_supplier"]).count()
 
     log.info("running 2 reports concurrently (FAIR pools %s/%s)",

@@ -1,41 +1,8 @@
 """Assemble the full query catalog.
 
 Importing this module imports every operator module, which registers its
-queries into ``REGISTRY`` via the ``@query`` decorator.
-
-Driver-facing ordering policy: the driver's correctness pass walks
-``queries()`` in dict order and adjudicates a bounded window (~50
-queries per round), so ``all_queries``/``all_oracles`` emit an
-explicit priority order instead of raw registration order.
-
-RE-VERIFICATION ROTATION (standing policy, ratified by the round-8
-verdict with its amendment — in force from round 9). The first-pass
-rotation CLOSED in round 8 (369/369 queries driver-green, zero
-re-spends); from now on every round's ~50-slot window re-verifies, in
-this priority order:
-
-1. Queries whose IMPLEMENTATION (Spark plan or oracle SQL) changed
-   since their last driver row — they must be re-adjudicated on the
-   changed artifact. These lead ``_DRIVER_FRONT``.
-2. Queries a round task materially touched (this round: the Class F
-   ingest-gate triage — the 53 names the float-edge extremes corpus
-   crashed or diverged before the gates landed; their lanes carry the
-   gated arithmetic).
-3. Everything else, OLDEST driver row first (``_DRIVER_VERIFIED`` is
-   kept sorted by last-green round ascending, ties in prior catalog
-   order) — a round-1 green is 500+ commits stale, and free window
-   slots should re-pin the stalest rows, not the freshest.
-
-Round-9 window composition: ``_DRIVER_FRONT`` = 61 names =
-``source_validity_gate_pin`` (the ONE Exception-B registry addition —
-the Class F gate contract pinned on inline NaN/±Inf/boundary probe
-literals) + the 15 impl-changed names (``maintenance_commit_log_replay``
-— its eqNullSafe fix landed after its last row; the simhash
-shared-kernel pair; the four CC_UNROLL connected-components queries;
-``sim_mmr_diversify`` — oracle gained the NULL-relevance guard; the
-eight streaming queries whose ingest path now applies the gate) + the
-remaining extremes-affected names. Names past the ~50-slot cut roll
-into the next round's front, followed by the stalest r1/r2 rows.
+queries into ``REGISTRY`` via the ``@query`` decorator. Catalog order is
+registration order.
 """
 
 from __future__ import annotations
@@ -79,410 +46,10 @@ from ..operators import (  # noqa: F401
 
 from .registry import REGISTRY, QuerySpec  # noqa: F401
 
-# First-pass rotation closed in round 8: nothing remains pending.
-_DRIVER_PENDING: list[str] = []
-
-# Round-9 re-verification front (see the module docstring): the new
-# Class F gate pin, then the 15 impl-changed names, then the remaining
-# extremes-affected names whose lanes carry the gated arithmetic.
-_DRIVER_FRONT = [
-    "source_validity_gate_pin",
-    "maintenance_commit_log_replay",
-    "dedup_simhash",
-    "dedup_simhash_portable",
-    "dedup_components_keeper",
-    "dedup_embedding_components",
-    "dedup_semdedup_purge",
-    "dedup_components_keep_best",
-    "sim_mmr_diversify",
-    "stream_hourly_rollup_merge",
-    "stream_click_attribution_join",
-    "stream_session_windows_final",
-    "stream_bot_burst_merge",
-    "stream_sliding_complete_mode",
-    "stream_sink_batchid_idempotence",
-    "stream_stateful_hwm_dedup",
-    "ab_test_proportion_z",
-    "agg_mad_outliers",
-    "agg_trimmed_mean",
-    "agg_value_histogram",
-    "agg_zscore_outliers",
-    "cdc_apply_changelog",
-    "embed_dim_stats",
-    "embed_int8_quantize",
-    "embed_matryoshka_recall",
-    "embed_pca_gramian",
-    "embed_random_projection",
-    "events_daily_from_hourly",
-    "events_decay_weighted_score",
-    "events_feature_drift_psi",
-    "events_gapfill_daily",
-    "events_hourly_rollup",
-    "events_ohlc_hourly",
-    "events_rfm_segmentation",
-    "events_session_window_builtin",
-    "events_sessionization",
-    "events_time_bucket_15min",
-    "events_time_weighted_average",
-    "join_salted_skew",
-    "rag_hybrid_rrf_fusion",
-    "rag_rank_biased_overlap",
-    "rag_retrieve_topk",
-    "sample_hard_negatives",
-    "sim_brute_force_topk",
-    "sim_cosine_pairs_blocked",
-    "sim_cosine_pairs_threshold",
-    "sim_ivf_portable_topk",
-    "sim_kmeans_portable",
-    "sim_kmeans_refine",
-    "sim_lsh_portable_buckets",
-    "sim_lsh_topk",
-    "sim_pq_adc_topk",
-    "ts_cusum_changepoint",
-    "ts_linear_interpolate_grid",
-    "ts_theil_sen_trend",
-    "ts_weekday_seasonality_index",
-    "udf_ewma_per_user",
-    "window_hampel_outliers",
-    "window_max_drawdown",
-    "window_range_frame_1h",
-    "window_rolling_ols_slope",
-]
-
-# Driver-green in CORRECTNESS_r01..r08.json, sorted STALEST FIRST
-# (last-green round ascending, ties in prior catalog order) so free
-# window slots always re-pin the oldest rows.
-_DRIVER_VERIFIED = [
-    "fn_string",
-    "fn_regexp_like_filter",
-    "fn_date",
-    "fn_math",
-    "agg_mode_deterministic",
-    "agg_percentile_disc",
-    "dedup_fuzzy_pairs_blocked",
-    "events_retention_cohort",
-    "fn_hash_digests",
-    "text_bigrams_top",
-    "agg_weighted_avg",
-    "agg_skewness_kurtosis",
-    "fn_interval_ship_latency",
-    "window_running_distinct",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "agg_pricing_summary",
-    "agg_count_distinct",
-    "agg_having",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_pivot",
-    "agg_stats",
-    "agg_string_concat_sorted",
-    "agg_argmax_bool",
-    "agg_corr_covar",
-    "fn_hash_sample",
-    "agg_global_no_group",
-    "agg_grouped_median",
-    "agg_bitmap_distinct",
-    "agg_rollup_grouping_id",
-    "layout_zorder_buckets",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "multimodal_arrow_stats",
-    "report_sales_by_customer",
-    "report_sales_by_supplier",
-    "join3_projection",
-    "incremental_scan_hwm",
-    "incremental_agg_merge",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "join_broadcast_snowflake",
-    "join_range_nonequi",
-    "join_theta_self_pairs",
-    "join_cross_explicit",
-    "join_5way_snowflake",
-    "join_asof_last_view",
-    "join_null_safe_eq",
-    "tpch_q3_shipping_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q12_shipmode_priority",
-    "tpch_q14_promo_share",
-    "tpch_q18_large_orders",
-    "tpch_q10_returned_items",
-    "tpch_q19_disjunctive",
-    "tpch_q4_order_priority",
-    "tpch_q13_order_distribution",
-    "events_funnel",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "agg_approx_percentile",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q11_value_concentration",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_diversity",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q20_excess_shippers",
-    "tpch_q21_sole_late_supplier",
-    "tpch_q22_dormant_customers",
-    "window_rank_topn_per_group",
-    "window_running_sum",
-    "window_lag_lead",
-    "window_dense_rank_share",
-    "window_first_last_value",
-    "window_ntile_quartiles",
-    "sort_limit_topk",
-    "window_percent_rank_cume",
-    "window_forward_fill",
-    "window_moving_avg_rows",
-    "setop_union_all",
-    "setop_intersect",
-    "setop_except",
-    "setop_distinct",
-    "setop_except_all",
-    "setop_union_by_name_evolution",
-    "setop_unpivot_melt",
-    "fn_case_null",
-    "fn_json_extract",
-    "fn_array_ops",
-    "fn_explode_posexplode",
-    "fn_bitwise",
-    "fn_date_format_parse",
-    "fn_map_ops",
-    "subquery_scalar",
-    "subquery_in_correlated",
-    "fn_stratified_sample",
-    "fn_variant_extract",
-    "fn_try_arithmetic",
-    "fn_url_parse",
-    "sql_pipe_syntax_report",
-    "window_gaps_islands",
-    "agg_entropy_per_group",
-    "scd2_user_value_history",
-    "agg_table_checksum",
-    "udf_pandas_scalar_charge",
-    "fn_from_json_struct",
-    "fn_hof_exists_filter",
-    "sim_label_centroids",
-    "dedup_minhash_lsh",
-    "dedup_winnow_fingerprints",
-    "text_stats",
-    "text_quality_score",
-    "text_langid",
-    "text_fingerprint",
-    "text_vocabulary_topk",
-    "text_token_count_bpe",
-    "text_chunk_sliding",
-    "fn_dataset_split",
-    "text_token_budget_sample",
-    "graph_pagerank_parts",
-    "agg_approx_count_distinct",
-    "agg_quantile_bucketize",
-    "agg_hll_rollup_merge",
-    "docs_pii_clean_ratio",
-    "setop_symmetric_difference",
-    "multimodal_decode_mp4_frames",
-    "udf_iterator_batch_scoring",
-    "udf_arrow_native_scalar",
-    "sample_stratified_split",
-    "multimodal_mp4_metadata",
-    "privacy_k_anonymity",
-    "multimodal_decode_ppm",
-    "multimodal_audio_wav",
-    "sql_named_parameters",
-    "privacy_randomized_response",
-    "multimodal_image_patches",
-    "agg_salted_skew",
-    "window_year_over_year",
-    "agg_log2_histogram",
-    "udf_grouped_agg_gini",
-    "feat_hashing_trick",
-    "text_code_detection",
-    "udf_broadcast_lookup_scoring",
-    "events_sliding_window_rollup",
-    "events_pattern_regex",
-    "events_pii_scrub",
-    "fn_xml_extract",
-    "setop_intersect_all",
-    "text_repetition_ratio",
-    "events_wilson_ctr_ranking",
-    "multimodal_decode_gif",
-    "sample_temporal_split_leakage",
-    "text_zipf_slope",
-    "udf_apply_in_pandas_top2",
-    "multimodal_pdf_catalog",
-    "udf_udtf_sentences",
-    "privacy_l_diversity",
-    "dedup_winnow_portable",
-    "join_lateral_topk",
-    "events_markov_transitions",
-    "profile_dataset_card",
-    "feat_target_encoding_loo",
-    "quality_luhn_checksum",
-    "quality_volume_anomaly_days",
-    "sql_cte_window",
-    "sql_identifier_dynamic_table",
-    "multimodal_audio_silence_trim",
-    "window_sliding_median_exact",
-    "agg_benford_digit_audit",
-    "pipeline_corpus_clean",
-    "multimodal_image_resize",
-    "multimodal_decode_mp4_moov_tail",
-    "text_bpe_train_merges",
-    "agg_bootstrap_ci",
-    "udf_cogroup_asof_merge",
-    "join_bloom_semi_reduction",
-    "layout_sorted_files",
-    "incremental_sliding_refresh",
-    "stream_static_enrichment",
-    "stream_dedup_first_seen",
-    "stream_restart_resume_counts",
-    "stream_watermark_late_drop",
-    "maintenance_zone_map_prune",
-    "maintenance_two_table_atomic_publish",
-    "maintenance_vacuum_orphans",
-    "maintenance_cbo_stats",
-    "maintenance_compact_small_files",
-    "maintenance_snapshot_diff",
-    "maintenance_time_travel_read",
-    "maintenance_merge_on_read",
-    "source_json_corrupt_quarantine",
-    "agg_abc_classification",
-    "privacy_dp_noisy_counts",
-    "agg_hll_set_overlap",
-    "agg_join_size_estimate",
-    "agg_top_movers_period_delta",
-    "text_perplexity_proxy",
-    "text_compression_ratio",
-    "sql_execute_immediate",
-    "join_point_in_time_features",
-    "sample_systematic_every_k",
-    "ab_mann_whitney_u",
-    "graph_common_neighbors",
-    "pipeline_training_mix",
-    "text_inverted_index",
-    "privacy_tokenize_consistent",
-    "agg_chi_square_independence",
-    "multimodal_image_phash",
-    "text_freq_items_sketch",
-    "text_distribution_drift",
-    "fn_aes_roundtrip",
-    "text_boilerplate_segment_dedup",
-    "ab_did_two_period",
-    "profile_table_columns",
-    "dedup_store_retention_gc",
-    "agg_pareto_frontier",
-    "quality_expectations",
-    "pipeline_mixture_temperature",
-    "source_provenance_input_file",
-    "agg_hhi_concentration",
-    "layout_hilbert_buckets",
-    "text_ngram_novelty",
-    "fn_trigram_similarity_topk",
-    "incremental_scd2_apply",
-    "privacy_erasure_propagation",
-    "source_fixed_width_parse",
-    "agg_weighted_median",
-    "text_decontamination",
-    "udf_sql_registered_pandas",
-    "incremental_join_merge",
-    "incremental_partition_backfill",
-    "sample_balanced_classes",
-    "events_bot_burst_detect",
-    "sql_recursive_cte_walk",
-    "dedup_incremental_new_docs",
-    "text_count_min_sketch",
-    "events_dau_wau",
-    "incremental_agg_retraction",
-    "dedup_chunk_dupe_ratio",
-    "multimodal_video_frames",
-    "source_hive_partitioned_prune",
-    "agg_bucketed_no_shuffle",
-    "text_dsir_importance",
-    "dedup_containment_ngram",
-    "events_littles_law_audit",
-    "fn_collation_group",
-    "text_tfidf_top3",
-    "text_url_canonicalize",
-    "multimodal_decode_jpeg",
-    "sample_weighted_reservoir_per_key",
-    "join_dpp_partitioned_fact",
-    "quality_functional_dependency_audit",
-    "window_largest_remainder_apportion",
-    "events_max_concurrent_sessions",
-    "incremental_scan_composite_hwm",
-    "sample_negative_unigram_cdf",
-    "archive_tar_webdataset",
-    "events_survival_nelson_aalen",
-    "join_bucketed_no_shuffle",
-    "text_rake_keywords",
-    "window_range_between_numeric",
-    "dedup_exact_substring_spans",
-    "agg_ks_two_sample",
-    "dedup_simhash_multiplicity_pin",
-    "events_bounce_rate",
-    "multimodal_video_scene_cuts",
-    "incremental_late_arriving_dimension",
-    "events_attribution_time_decay",
-    "join_interval_binned",
-    "join_interval_overlap_binned",
-    "layout_consistent_hash_ring",
-    "dedup_minhash_portable",
-    "privacy_t_closeness",
-    "ts_autocorrelation",
-    "window_fifo_allocation",
-    "join_asof_tolerance",
-    "multimodal_video_avi_mjpeg",
-    "join_hint_strategy_invariance",
-    "er_fuzzy_parts",
-    "text_sequence_pack",
-    "agg_market_basket",
-    "multimodal_mixed_routing",
-    "incremental_session_stitch",
-    "events_markov_stationary_power",
-    "sql_scripting_adaptive_threshold",
-    "sim_ivf_topk",
-    "geo_grid_nn_join",
-    "graph_triangle_count",
-    "graph_sssp_bellman_ford",
-    "graph_kcore_peel",
-    "graph_bfs_levels",
-    "udf_udtf_analyze_schema",
-    "source_schema_evolution_merge",
-    "source_codec_matrix",
-    "source_multiformat_roundtrip",
-    "source_python_datasource_agg",
-    "events_attribution_multitouch",
-    "text_bm25_topk",
-    "events_funnel_conversion",
-    "pipeline_observe_metrics",
-]
-
-
-def _ordered_names() -> list[str]:
-    listed = set(_DRIVER_PENDING) | set(_DRIVER_FRONT) | set(_DRIVER_VERIFIED)
-    new = [n for n in REGISTRY if n not in listed]
-    return (
-        [n for n in _DRIVER_FRONT if n in REGISTRY]
-        + [n for n in _DRIVER_PENDING if n in REGISTRY]
-        + new
-        + [n for n in _DRIVER_VERIFIED if n in REGISTRY]
-    )
-
 
 def all_queries():
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def all_oracles():
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}

@@ -56,14 +56,18 @@ class BookmarkStore:
     def get(self, source: str) -> Any | None:
         return self._load().get(source)
 
-    def commit(self, source: str, hwm: Any) -> None:
-        state = self._load()
-        state[source] = hwm
-        os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(self.path)))
+    def _write(self, state: dict[str, Any]) -> None:
+        directory = os.path.dirname(os.path.abspath(self.path))
+        os.makedirs(directory, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=directory)
         with os.fdopen(fd, "w") as f:
             json.dump(state, f)
         os.replace(tmp, self.path)
+
+    def commit(self, source: str, hwm: Any) -> None:
+        state = self._load()
+        state[source] = hwm
+        self._write(state)
 
     def reset(self, source: str | None = None) -> None:
         if source is None:
@@ -72,10 +76,7 @@ class BookmarkStore:
             return
         state = self._load()
         state.pop(source, None)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(self.path)))
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        self._write(state)
 
 
 @dataclass

@@ -35,7 +35,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aws_glue_pyspark_incrementality_and_parallelism_spark.operators import multimodal
-from aws_glue_pyspark_incrementality_and_parallelism_spark.plans import catalog
 from aws_glue_pyspark_incrementality_and_parallelism_spark.plans.catalog import REGISTRY
 from aws_glue_pyspark_incrementality_and_parallelism_spark.session import build_spark
 from tests.oracle import driver_canonicalize, duckdb_rows, normalize
@@ -303,9 +302,7 @@ def main() -> None:
     spark = build_spark(app_name="parity-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     results = {}
-    # walk the same explicit priority order the driver sees
-    for name in catalog.all_queries():
-        spec = REGISTRY[name]
+    for name, spec in REGISTRY.items():
         row = {"oracle": spec.oracle is not None}
         t0 = time.monotonic()
         try:

@@ -150,3 +150,60 @@ def test_choice_type_resolution(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="not a choice struct"):
         dyf.resolveChoice([("id", "cast:long")])
+
+
+def test_compat_composite_bookmark_keys_two_runs(spark, tmp_path):
+    """Composite ``jobBookmarkKeys`` through the façade: the second run
+    reads exactly the rows appended after the first run's commit, even
+    when the split falls inside one order's line numbers. A scalar
+    bookmark left by a single-key job then fails loudly."""
+    import pytest
+
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.incremental import (
+        BookmarkStore,
+    )
+
+    keys = ["l_orderkey", "l_linenumber"]
+    opts = {"jobBookmarkKeys": keys, "jobBookmarkKeysSortOrder": "asc"}
+    li = load_table(spark, SF_SMALL, "lineitem")
+    # split mid-table inside an order with lines on both sides of 2, so
+    # only the second key separates the runs at that order
+    lines = li.groupBy("l_orderkey").agg(
+        F.min("l_linenumber").alias("lo"), F.max("l_linenumber").alias("hi")
+    )
+    k = (
+        lines.filter((F.col("lo") <= 2) & (F.col("hi") > 2) & (F.col("l_orderkey") >= 700))
+        .agg(F.min("l_orderkey"))
+        .first()[0]
+    )
+    cut = (F.col("l_orderkey") < k) | ((F.col("l_orderkey") == k) & (F.col("l_linenumber") <= 2))
+    last = li.filter(cut & (F.col("l_orderkey") == k)).agg(F.max("l_linenumber")).first()[0]
+    cat, out = str(tmp_path / "cat"), str(tmp_path / "out")
+    li.filter(cut).write.parquet(os.path.join(cat, "lineitem.parquet"))
+
+    def read():
+        ctx = compat.GlueCompatContext(spark, cat, out, job_bookmarks=True)
+        frame = ctx.create_dynamic_frame.from_catalog(
+            database="testdata",
+            table_name="lineitem",
+            transformation_ctx="src_lineitem",
+            additional_options=opts,
+        )
+        return ctx, frame
+
+    ctx, run1 = read()
+    assert run1.count() == li.filter(cut).count() > 0
+    ctx.commit_bookmarks()
+    assert ctx.bookmarks.get("src_lineitem") == [k, last]
+
+    li.filter(~cut).write.mode("append").parquet(os.path.join(cat, "lineitem.parquet"))
+    ctx, run2 = read()
+    assert run2.df.select(*keys).exceptAll(li.filter(~cut).select(*keys)).count() == 0
+    assert run2.count() == li.filter(~cut).count() > 0
+    ctx.commit_bookmarks()
+    ctx, run3 = read()
+    assert run3.count() == 0
+
+    BookmarkStore(os.path.join(out, "_bookmarks.json")).commit("src_lineitem", k)
+    with pytest.raises(ValueError, match="key set changed"):
+        read()

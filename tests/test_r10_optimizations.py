@@ -231,16 +231,13 @@ def test_cogroup_asof_matches_within_user_across_2e53(spark, big_id_events_dir):
 def test_fan_out_modes_and_busy_scheduler_skip(spark, monkeypatch):
     from aws_glue_pyspark_incrementality_and_parallelism_spark import session as S
 
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
     df = spark.range(10).coalesce(1)
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "0")
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 1
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "1")
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 4
-    # adaptive default: idle scheduler -> fan out
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT", raising=False)
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 4
+    # idle scheduler -> fan out to defaultParallelism
+    assert S.fan_out_compute(df).rdd.getNumPartitions() == n
 
-    # adaptive default: saturated scheduler -> elective fan-out skipped
+    # saturated scheduler -> elective fan-out skipped
     class _BusyTracker:
         def getActiveJobsIds(self):
             return [1, 2, 3, 4, 5]
@@ -248,25 +245,13 @@ def test_fan_out_modes_and_busy_scheduler_skip(spark, monkeypatch):
     monkeypatch.setattr(
         spark.sparkContext, "statusTracker", lambda: _BusyTracker()
     )
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 1
+    assert S.fan_out_compute(df).rdd.getNumPartitions() == 1
     # load-bearing (elective=False) fan-outs — the codec lanes — ignore
     # the busy probe: skipping would serialize a tens-of-seconds Python
-    # decode stage onto one task (measured 60 s -> 272 s concurrent wave)
+    # decode stage onto one task
     assert (
-        S.fan_out_compute(df, min_parts=4, elective=False)
-        .rdd.getNumPartitions()
-        == 4
+        S.fan_out_compute(df, elective=False).rdd.getNumPartitions() == n
     )
-    # ... and the A/B kill-switch does not apply to them either
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "0")
-    assert (
-        S.fan_out_compute(df, min_parts=4, elective=False)
-        .rdd.getNumPartitions()
-        == 4
-    )
-    # forced ON ignores the busy probe
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "1")
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 4
 
 
 # ----------------------------------------------------- JPEG DHT guards
