@@ -8,8 +8,9 @@ The two jobs every 100 TB parquet lake runs nightly:
   throughput (per-file open/footer cost, tiny row groups defeat
   vectorized reads) and bloat the driver's file index. Compaction
   bin-packs them back to target-size files. Plain parquet gets the
-  copy-on-write staging-swap used by upsert.py; table formats (Delta
-  OPTIMIZE, Iceberg rewrite_data_files) add snapshot isolation on top.
+  copy-on-write commit of ``sources.io.replace_parquet``; table formats
+  (Delta OPTIMIZE, Iceberg rewrite_data_files) add snapshot isolation
+  on top.
 
 * **Zone maps** — per-partition (or per-file) min/max statistics let
   the planner skip data that cannot match a predicate. Hive-style
@@ -26,19 +27,20 @@ incremental appends.
 
 from __future__ import annotations
 
+import json
 import math
 import os
-import shutil
 import tempfile
 import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..plans.registry import query
 from ..session import pin
-from ..sources.io import load_table
+from ..sources.io import load_table, replace_parquet
 
 
 def parquet_files(target_dir: str) -> list[str]:
@@ -58,8 +60,7 @@ def compact_parquet(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Bin-pack the files under ``target_dir`` into ~``target_file_bytes``
-    outputs. Copy-on-write with an atomic staging swap (same commit
-    protocol as upsert.py:26).
+    outputs, committed by ``sources.io.replace_parquet``.
 
     File count is computed from on-disk bytes, not row counts, so the
     result respects the scan-side ``files.maxPartitionBytes`` sizing
@@ -69,19 +70,28 @@ def compact_parquet(
     per-partition (compact only partitions whose small-file count
     crossed a threshold), never whole-table.
 
+    A Hive-partitioned directory raises ``ValueError``: the flat rewrite
+    would drop its ``key=value`` layout. So does a directory with no
+    data files.
+
     Returns driver-side stats {files_before, files_after, bytes_total}.
     """
+    partition_dirs = [
+        d
+        for d in sorted(os.listdir(target_dir))
+        if os.path.isdir(os.path.join(target_dir, d)) and not d.startswith((".", "_"))
+    ]
+    if partition_dirs:
+        raise ValueError(
+            f"compact_parquet: {target_dir} contains partition subdirectories "
+            f"({partition_dirs[0]}, ...); compact each partition directory instead"
+        )
     files = parquet_files(target_dir)
+    if not files:
+        raise ValueError(f"compact_parquet: no data files under {target_dir}")
     bytes_total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(bytes_total / target_file_bytes))
-    merged = spark.read.parquet(target_dir).repartition(n_out)
-
-    staging = f"{target_dir}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    backup = f"{target_dir}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_dir, backup)
-    os.rename(staging, target_dir)
-    shutil.rmtree(backup)
+    replace_parquet(spark.read.parquet(target_dir).repartition(n_out), target_dir)
     return {
         "files_before": len(files),
         "files_after": len(parquet_files(target_dir)),
@@ -400,6 +410,54 @@ def maintenance_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _write_commit_log(
+    spark: SparkSession, orders: DataFrame, prefix: str
+) -> tuple[str, str]:
+    """Write the three-commit orders table the commit-log queries share
+    and return ``(data_dir, log_dir)``. Commits: (0) the low-price half
+    as 4 files, (1) the high-price half as 1 file, (2) a compaction that
+    removes the 4 initial files and adds 1 rewritten file with the same
+    rows. Removed files stay on disk; only the log says they are dead.
+    Each commit is one JSON-lines file of add/remove actions."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
+    os.makedirs(logdir)
+    v0, v1, v2 = (os.path.join(data, v) for v in ("v0", "v1", "v2"))
+    orders.filter(F.col("o_totalprice") <= 300000).repartition(4).write.parquet(v0)
+    orders.filter(F.col("o_totalprice") > 300000).coalesce(1).write.parquet(v1)
+    spark.read.parquet(v0).coalesce(1).write.parquet(v2)
+    adds = [sorted(parquet_files(d)) for d in (v0, v1, v2)]
+    for version, removes in enumerate(([], [], adds[0])):
+        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
+            for action, paths in (("add", adds[version]), ("remove", removes)):
+                for p in paths:
+                    fh.write(json.dumps({"action": action, "path": p, "v": version}) + "\n")
+    return data, logdir
+
+
+def _live_files(log: DataFrame, as_of: int | None = None) -> list[str]:
+    """Replay a commit log: a path is live when its last action (highest
+    version; a remove beats an add in the same version) is an add.
+    ``as_of`` replays only the actions up to that version."""
+    if as_of is not None:
+        log = log.filter(F.col("v") <= as_of)
+    last = Window.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
+    live = log.withColumn("rn", F.row_number().over(last)).filter(
+        (F.col("rn") == 1) & (F.col("action") == "add")
+    )
+    return sorted(r["path"] for r in live.select("path").collect())
+
+
+def _orders_checksum(orders: DataFrame) -> DataFrame:
+    """Row count and exact cents checksum of an orders snapshot."""
+    return orders.agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
+        .cast("bigint")
+        .alias("sum_totalprice_cents"),
+    )
+
+
 @query(
     "maintenance_commit_log_replay",
     oracle="""
@@ -434,48 +492,9 @@ def maintenance_commit_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     add/remove is what partition overwrite, compaction, and DELETE all
     compile to.
     """
-    import json as _json
-
-    root = tempfile.mkdtemp(prefix="sgq_txlog_")
-    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
-    os.makedirs(data), os.makedirs(logdir)
     orders = load_table(spark, sf_dir, "orders")
-
-    def _files(subdir: str) -> list[str]:
-        return sorted(parquet_files(os.path.join(data, subdir)))
-
-    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
-        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
-            for p in adds:
-                fh.write(_json.dumps({"action": "add", "path": p, "v": version}) + "\n")
-            for p in removes:
-                fh.write(_json.dumps({"action": "remove", "path": p, "v": version}) + "\n")
-
-    low = orders.filter(F.col("o_totalprice") <= 300000)
-    high = orders.filter(F.col("o_totalprice") > 300000)
-    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
-    _commit(0, _files("v0"), [])
-    high.write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    _commit(1, _files("v1"), [])
-    # compaction: rewrite the 4 initial files as 1; old files stay on disk
-    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(data, "v2"))
-    _commit(2, _files("v2"), _files("v0"))
-
-    from pyspark.sql.window import Window
-
-    log = spark.read.json(os.path.join(logdir, "*.json"))
-    last = (
-        log.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
-            ),
-        )
-        .filter((F.col("rn") == 1) & (F.col("action") == "add"))
-    )
-    live_files = [r["path"] for r in last.select("path").collect()]
+    data, logdir = _write_commit_log(spark, orders, "sgq_txlog_")
+    live_files = _live_files(spark.read.json(os.path.join(logdir, "*.json")))
     n_commits = len(os.listdir(logdir))
 
     snapshot = spark.read.parquet(*live_files)
@@ -499,12 +518,7 @@ def maintenance_commit_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
     diff = _anti_count(snapshot, orders) + _anti_count(orders, snapshot)
     dead_on_disk = set(parquet_files(data)) - set(live_files)
-    return snapshot.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_totalprice_cents"),
-    ).select(
+    return _orders_checksum(snapshot).select(
         F.lit(n_commits).alias("n_commits"),
         "n_rows",
         "sum_totalprice_cents",
@@ -547,55 +561,14 @@ def maintenance_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is how reproducible training runs pin the exact corpus
     snapshot a model saw, independent of later ingest/compaction.
     """
-    import json as _json
-
-    root = tempfile.mkdtemp(prefix="sgq_timetravel_")
-    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
-    os.makedirs(data), os.makedirs(logdir)
-    orders = load_table(spark, sf_dir, "orders")
-
-    def _files(subdir: str) -> list[str]:
-        return sorted(parquet_files(os.path.join(data, subdir)))
-
-    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
-        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
-            for p in adds:
-                fh.write(_json.dumps({"action": "add", "path": p, "v": version}) + "\n")
-            for p in removes:
-                fh.write(_json.dumps({"action": "remove", "path": p, "v": version}) + "\n")
-
-    low = orders.filter(F.col("o_totalprice") <= 300000)
-    high = orders.filter(F.col("o_totalprice") > 300000)
-    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
-    _commit(0, _files("v0"), [])
-    high.write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    _commit(1, _files("v1"), [])
-    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(data, "v2"))
-    _commit(2, _files("v2"), _files("v0"))
-
-    from pyspark.sql.window import Window
-
+    _, logdir = _write_commit_log(
+        spark, load_table(spark, sf_dir, "orders"), "sgq_timetravel_"
+    )
     log = spark.read.json(os.path.join(logdir, "*.json"))
     out = None
     for version in (0, 1, 2):
-        last = (
-            log.filter(F.col("v") <= version)
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
-                ),
-            )
-            .filter((F.col("rn") == 1) & (F.col("action") == "add"))
-        )
-        live_files = [r["path"] for r in last.select("path").collect()]
-        snap = spark.read.parquet(*live_files).agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_totalprice_cents"),
+        snap = _orders_checksum(
+            spark.read.parquet(*_live_files(log, as_of=version))
         ).select(F.lit(version).alias("version"), "*")
         out = snap if out is None else out.unionByName(snap)
     return out.orderBy("version")
@@ -630,58 +603,14 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirroring `VACUUM ... RETAIN 0 HOURS`. At 100 TB the dead set is
     resolved from O(actions) metadata — the only filesystem work is
     the deletes themselves."""
-    import json as _json
-
-    root = tempfile.mkdtemp(prefix="sgq_vacuum_")
-    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
-    os.makedirs(data), os.makedirs(logdir)
     orders = load_table(spark, sf_dir, "orders")
-
-    def _files(subdir: str) -> list[str]:
-        return sorted(parquet_files(os.path.join(data, subdir)))
-
-    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
-        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
-            for p in adds:
-                fh.write(_json.dumps({"action": "add", "path": p, "v": version}) + "\n")
-            for p in removes:
-                fh.write(_json.dumps({"action": "remove", "path": p, "v": version}) + "\n")
-
-    low = orders.filter(F.col("o_totalprice") <= 300000)
-    high = orders.filter(F.col("o_totalprice") > 300000)
-    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
-    _commit(0, _files("v0"), [])
-    high.coalesce(1).write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    _commit(1, _files("v1"), [])
-    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(data, "v2"))
-    _commit(2, _files("v2"), _files("v0"))
+    data, logdir = _write_commit_log(spark, orders, "sgq_vacuum_")
     # Crash debris: written, never committed.
-    low.limit(10).coalesce(1).write.mode("overwrite").parquet(
+    orders.filter(F.col("o_totalprice") <= 300000).limit(10).coalesce(1).write.parquet(
         os.path.join(data, "orphan")
     )
-
-    from pyspark.sql.window import Window as _W
-
-    log = spark.read.json(os.path.join(logdir, "*.json"))
-    last = (
-        log.withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
-            ),
-        )
-        .filter((F.col("rn") == 1) & (F.col("action") == "add"))
-    )
-    live = sorted(r["path"] for r in last.select("path").collect())
-
-    before_cs = spark.read.parquet(*live).agg(
-        F.count("*").alias("n"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("cents"),
-    ).collect()[0]
+    live = _live_files(spark.read.json(os.path.join(logdir, "*.json")))
+    before_cs = _orders_checksum(spark.read.parquet(*live)).collect()[0]
 
     all_before = sorted(parquet_files(data))
     dead = [p for p in all_before if p not in set(live)]
@@ -689,12 +618,7 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.remove(p)
     all_after = sorted(parquet_files(data))
 
-    after = spark.read.parquet(*live).agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_totalprice_cents"),
-    )
+    after = _orders_checksum(spark.read.parquet(*live))
     return after.select(
         F.lit(len(all_before)).cast("bigint").alias("n_files_before"),
         F.lit(len(all_after)).cast("bigint").alias("n_files_after"),
@@ -702,8 +626,8 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows",
         "sum_totalprice_cents",
         (
-            (F.col("n_rows") == F.lit(before_cs["n"]))
-            & (F.col("sum_totalprice_cents") == F.lit(before_cs["cents"]))
+            (F.col("n_rows") == before_cs["n_rows"])
+            & (F.col("sum_totalprice_cents") == before_cs["sum_totalprice_cents"])
         ).alias("snapshot_unchanged"),
     )
 
@@ -756,8 +680,6 @@ def q_maintenance_two_table_atomic_publish(spark: SparkSession, sf_dir: str) -> 
     consistent); the commit point is one rename regardless of how many
     tables or petabytes a snapshot spans.
     """
-    import json
-
     root = tempfile.mkdtemp(prefix="sgq_atomicpub_")
     tables = {"a": os.path.join(root, "tables", "a"), "b": os.path.join(root, "tables", "b")}
     manifests = os.path.join(root, "manifests")
@@ -905,8 +827,6 @@ def q_maintenance_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # merge-on-read: last delta per key wins over base
     deltas = spark.read.option("recursiveFileLookup", "true").parquet(delta_path)
-    from pyspark.sql.window import Window
-
     last = (
         deltas.withColumn(
             "rn", F.row_number().over(Window.partitionBy("k").orderBy(F.desc("seq")))

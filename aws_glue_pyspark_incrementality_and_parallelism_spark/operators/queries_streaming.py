@@ -42,7 +42,20 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..session import pin
-from ..sources.io import load_table
+from ..sources.io import load_table, replace_parquet
+
+
+def _write_arrival_file(df: DataFrame, src: str, name: str, mtime: int) -> None:
+    """Land ``df`` as the single file ``<src>/<name>.parquet`` with the
+    given mtime. The streaming file source takes new files in mtime
+    order, so the mtimes fix the micro-batch arrival order."""
+    part_dir = os.path.join(src, f"_stage_{name}")
+    df.coalesce(1).write.parquet(part_dir)
+    part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+    dst = os.path.join(src, f"{name}.parquet")
+    shutil.move(os.path.join(part_dir, part), dst)
+    shutil.rmtree(part_dir)
+    os.utime(dst, (mtime, mtime))
 
 
 def _stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -483,9 +496,6 @@ def stream_bot_burst_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # max-merge into the standing table; first batch detected by
         # PATH EXISTENCE — a transient read failure on a later batch
         # must propagate, never silently reset accumulated peaks
-        import shutil as _shutil
-        import uuid as _uuid
-
         cand = batch_df.groupBy("user_id").agg(F.max("n").alias("peak_5min"))
         if os.path.exists(state):
             old = spark.read.parquet(state)
@@ -497,17 +507,8 @@ def stream_bot_burst_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             merged = cand
         # merged already folds the old state, so a keyed upsert's
-        # anti-join would be provably empty work: stage + swap directly
-        # (same copy-on-write protocol as upsert.py:45)
-        staging = f"{state}__staging_{_uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(staging)
-        backup = f"{state}__old_{_uuid.uuid4().hex[:8]}"
-        if os.path.exists(state):
-            os.rename(state, backup)
-            os.rename(staging, state)
-            _shutil.rmtree(backup)
-        else:
-            os.rename(staging, state)
+        # anti-join would be provably empty work: commit it directly
+        replace_parquet(merged, state)
 
     (
         counts.writeStream.outputMode("update")
@@ -596,15 +597,12 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="sgq_late_src_")
     for arrival, week in enumerate([2, 3, 0, 1]):
-        part_dir = os.path.join(src, f"_stage_{week}")
-        tagged.filter(F.col("wk") == week).select("event_id", "ts").coalesce(
-            1
-        ).write.parquet(part_dir)
-        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"arrival_{arrival}.parquet")
-        shutil.move(os.path.join(part_dir, part), dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (1_700_000_000 + arrival * 100,) * 2)
+        _write_arrival_file(
+            tagged.filter(F.col("wk") == week).select("event_id", "ts"),
+            src,
+            f"arrival_{arrival}",
+            1_700_000_000 + arrival * 100,
+        )
 
     ckpt = tempfile.mkdtemp(prefix="sgq_late_ck_") + f"/{_uuid.uuid4().hex[:8]}"
     out = tempfile.mkdtemp(prefix="sgq_late_out_")
@@ -696,15 +694,12 @@ def stream_stateful_hwm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,  # full redelivery
     ]
     for i, b in enumerate(batches):
-        part_dir = os.path.join(src, f"_stage_{i}")
-        b.select("user_id", "event_id", "event_type", "value").coalesce(1).write.parquet(
-            part_dir
+        _write_arrival_file(
+            b.select("user_id", "event_id", "event_type", "value"),
+            src,
+            f"delivery_{i}",
+            1_700_000_000 + i * 100,
         )
-        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"delivery_{i}.parquet")
-        shutil.move(os.path.join(part_dir, part), dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (1_700_000_000 + i * 100,) * 2)
 
     ckpt = tempfile.mkdtemp(prefix="sgq_hwm_ck_") + f"/{_uuid.uuid4().hex[:8]}"
     out = tempfile.mkdtemp(prefix="sgq_hwm_out_")

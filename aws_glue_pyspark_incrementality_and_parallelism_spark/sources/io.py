@@ -13,6 +13,8 @@ parquet.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -413,71 +415,24 @@ def write_parquet(
     writer.parquet(path)
 
 
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction — the housekeeping pass every incremental
-    sink eventually needs: append-mode micro-batches (streaming
-    foreachBatch, per-run bookmark slices) accumulate files far below
-    the ideal scan unit, and scan parallelism degrades into
-    per-file-overhead noise.
+def replace_parquet(df: DataFrame, target_dir: str) -> None:
+    """Copy-on-write commit of ``df`` as the parquet table at ``target_dir``.
 
-    Strategy: size the output file count from the directory's actual
-    bytes (ceil(total/target)), rewrite with ``coalesce`` (no shuffle —
-    compaction must not pay a data-sized exchange), then swap the new
-    files in atomically enough for a single-writer layout: write to a
-    sibling staging dir, delete the old files, move the new ones in.
-    On a real lakehouse this is table-format territory (Delta OPTIMIZE /
-    Iceberg rewrite_data_files with snapshot isolation); the planning
-    logic — bytes-driven target file count, shuffle-free rewrite — is
-    identical here.
-
-    Returns {"files_before", "files_after", "bytes"}.
+    ``df`` is written in full to a sibling staging dir first, so it may
+    read the target it replaces, and a failed write leaves the target
+    untouched. Then the old target (if any) is renamed aside, the
+    staging dir renamed onto the target, and the old copy removed.
+    Renames are atomic on posix local/HDFS; object stores need a
+    manifest commit instead.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    files_before = [
-        p for p in _glob.glob(_os.path.join(path, "*.parquet")) if _os.path.isfile(p)
-    ]
-    if not files_before:
-        files_before = [
-            p
-            for p in _glob.glob(_os.path.join(path, "part-*"))
-            if _os.path.isfile(p)
-        ]
-    # Hive-partitioned layouts keep data in key=value subdirectories; the
-    # read-then-delete swap below only tracks top-level files, so compacting
-    # such a dataset would merge partition data into new top-level files
-    # while leaving the originals in place — silently doubling the table.
-    partition_dirs = [
-        d
-        for d in _glob.glob(_os.path.join(path, "*"))
-        if _os.path.isdir(d) and not _os.path.basename(d).startswith((".", "_"))
-    ]
-    if partition_dirs:
-        raise ValueError(
-            f"compact_parquet_dir: {path} contains partition subdirectories "
-            f"({_os.path.basename(partition_dirs[0])}, ...); flat-layout "
-            "compaction would duplicate their rows. Compact each partition "
-            "directory individually instead."
-        )
-    if not files_before:
-        raise ValueError(
-            f"compact_parquet_dir: no top-level data files found under {path}"
-        )
-    total = sum(_os.path.getsize(p) for p in files_before)
-    n_out = max(1, -(-total // target_file_bytes))
-    staging = path.rstrip("/") + "__compact_staging"
-    spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(staging)
-    for p in files_before:
-        _os.remove(p)
-    moved = 0
-    for p in _glob.glob(_os.path.join(staging, "part-*")):
-        _shutil.move(p, _os.path.join(path, _os.path.basename(p)))
-        moved += 1
-    _shutil.rmtree(staging, ignore_errors=True)
-    return {"files_before": len(files_before), "files_after": moved, "bytes": total}
+    tag = uuid.uuid4().hex[:8]
+    staging, backup = f"{target_dir}__staging_{tag}", f"{target_dir}__old_{tag}"
+    try:
+        write_parquet(df, staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(target_dir):
+        os.rename(target_dir, backup)
+    os.rename(staging, target_dir)
+    shutil.rmtree(backup, ignore_errors=True)

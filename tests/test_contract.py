@@ -1,5 +1,6 @@
 """Contracts outside any one query: the `__spark_entry__` catalog order, the
-bare-run parallelism default, and the documented knob inventory."""
+bare-run parallelism default, the documented knob inventory, and the one
+copy-on-write commit."""
 
 from __future__ import annotations
 
@@ -39,3 +40,17 @@ def test_every_package_knob_is_in_the_readme_table():
                     read |= set(re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read()))
     assert read, "the scan found no knobs at all"
     assert read <= documented, f"undocumented knobs: {sorted(read - documented)}"
+
+
+def test_staging_swap_lives_only_in_replace_parquet():
+    """Copy-on-write parquet commits go through `sources.io.replace_parquet`;
+    a hand-written staging swap anywhere else fails here."""
+    found = set()
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    if "__staging" in f.read():
+                        found.add(os.path.relpath(path, PKG))
+    assert found == {os.path.join("sources", "io.py")}

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import load_table, write_parquet
@@ -49,15 +50,15 @@ def test_dynamic_partition_overwrite_is_idempotent(spark, tmp_path):
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def test_compact_parquet_dir_preserves_data(spark, tmp_path):
+def test_compact_parquet_preserves_appended_data(spark, tmp_path):
     """Compaction: many small append files become few right-sized ones;
     row set is byte-identical before/after."""
     from pyspark.sql import functions as F
 
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        compact_parquet_dir,
-        load_table,
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.operators.maintenance import (
+        compact_parquet,
     )
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import load_table
     from .conftest import SF_SMALL
 
     out = str(tmp_path / "sink")
@@ -74,7 +75,7 @@ def test_compact_parquet_dir_preserves_data(spark, tmp_path):
         F.sum(F.crc32(F.concat_ws("|", "o_orderkey", "o_orderstatus")))
     ).collect()[0][0]
 
-    stats = compact_parquet_dir(spark, out, target_file_bytes=64 * 1024 * 1024)
+    stats = compact_parquet(spark, out, target_file_bytes=64 * 1024 * 1024)
     assert stats["files_before"] >= 12
     assert stats["files_after"] < stats["files_before"]
 
@@ -84,6 +85,53 @@ def test_compact_parquet_dir_preserves_data(spark, tmp_path):
         F.sum(F.crc32(F.concat_ws("|", "o_orderkey", "o_orderstatus")))
     ).collect()[0][0]
     assert checksum_after == checksum_before
+
+
+def test_replace_parquet_failed_write_keeps_target(spark, tmp_path):
+    """A frame that fails at execution raises out of replace_parquet and
+    leaves the existing target and its directory untouched."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
+        replace_parquet,
+    )
+
+    target = str(tmp_path / "t")
+    replace_parquet(spark.range(5), target)
+    replace_parquet(spark.range(3).withColumn("id", F.col("id") + 10), target)
+    before = sorted(r.id for r in spark.read.parquet(target).collect())
+    assert before == [10, 11, 12]
+
+    # reads the target it replaces, as upsert_parquet does
+    failing = spark.read.parquet(target).withColumn(
+        "id", F.when(F.col("id") == 11, F.raise_error(F.lit("boom"))).otherwise(F.col("id"))
+    )
+    with pytest.raises((Py4JJavaError, PySparkException)):
+        replace_parquet(failing, target)
+    assert sorted(r.id for r in spark.read.parquet(target).collect()) == before
+    assert os.listdir(tmp_path) == ["t"]
+
+
+def test_compact_parquet_rejects_partitioned_dir(spark, tmp_path):
+    """A flat rewrite would drop the key=value layout."""
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.operators.maintenance import (
+        compact_parquet,
+    )
+
+    hive = str(tmp_path / "hive")
+    write_parquet(load_table(spark, SF_SMALL, "events"), hive, partition_by=["event_type"])
+    with pytest.raises(ValueError, match="partition subdirectories"):
+        compact_parquet(spark, hive)
+
+
+def test_compact_parquet_rejects_empty_dir(spark, tmp_path):
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.operators.maintenance import (
+        compact_parquet,
+    )
+
+    with pytest.raises(ValueError, match="no data files"):
+        compact_parquet(spark, str(tmp_path))
 
 
 def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):

@@ -236,8 +236,8 @@ def test_stream_sink_then_compaction(spark, tmp_path):
     per-batch files; compaction rewrites them into few right-sized files
     without changing the row set — the nightly housekeeping pass every
     incremental pipeline runs."""
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        compact_parquet_dir,
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.operators.maintenance import (
+        compact_parquet,
     )
 
     tmp = str(tmp_path)
@@ -253,7 +253,7 @@ def test_stream_sink_then_compaction(spark, tmp_path):
     n_rows = before.count()
     total_events = before.agg(F.sum("n_events")).collect()[0][0]
 
-    stats = compact_parquet_dir(spark, out)
+    stats = compact_parquet(spark, out)
     assert stats["files_after"] < stats["files_before"]
 
     after = spark.read.parquet(out)
